@@ -160,6 +160,16 @@ def _media_main(argv) -> int:
     return 0
 
 
+def _sampling_ratio(s: str) -> float:
+    try:
+        r = float(s)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not a number: {s!r}") from None
+    if not 0 < r <= 1:
+        raise argparse.ArgumentTypeError(f"must be in (0, 1], got {s}")
+    return r
+
+
 def main(argv=None) -> int:
     if argv is None:
         argv = sys.argv[1:]
@@ -185,7 +195,14 @@ def main(argv=None) -> int:
         help="FAILFAST aborts on the first bad line (reference behavior); "
         "PERMISSIVE skips bad rows",
     )
-    p.add_argument("--sampling-ratio", type=float, default=None)
+    p.add_argument(
+        "--sampling-ratio",
+        type=_sampling_ratio,
+        default=None,
+        metavar="R",
+        help="infer from a deterministic sample of this share of the lines "
+        "(0 < R <= 1)",
+    )
     p.add_argument(
         "--detect-dates",
         action="store_true",

@@ -1,44 +1,51 @@
-"""Distributed NDJSON schema inference — the Spark-native pipeline.
+"""Distributed NDJSON schema inference — one fold, run wherever the lines are.
 
 The reference runs a sequential fold over a lazy line iterator in a single
-JVM thread (``/root/reference/Schemer.scala:7-14``).  Here the same fold is a
-classic **partial/final distributed aggregation**:
+JVM thread (``Schemer.scala:7-14``).  Here that fold is
+:func:`_fold`, and every entry point is a partial/final aggregation over it:
 
-    sc.textFile(path)                       # operator 1: line-delimited scan
-      .mapPartitionsWithIndex(local fold)   # operators 2-4: parse + observe,
-                                            #   one partial schema per partition
-      → driver: prefix-sum line counts, merge partials in partition order
-                                            # final merge (first-seen field order)
+    lines of one partition / one Arrow task / one iterator
+      → _fold(seed, lines)         # parse + observe, one partial schema
+      → driver: merge_partial(...) in partition order
+                                   # final merge (first-seen field order)
 
-Each partition emits exactly one tiny record (partition id, line count,
-partial descriptor or first error), so the driver-side work is O(partitions ×
-schema size) — at 100 TB / 128 MB splits that is ~800k small merges, still
-driver-trivial, and the heavy parse work is embarrassingly parallel.  Line
-numbers are exact without a ``zipWithIndex`` second job: local offsets +
-driver prefix sums (SURVEY §7 "cheap line numbers at scale").
+``_fold`` works in batches: each distinct raw string of a batch is parsed
+once, the batch is tried through the flat accumulator fast path
+(:func:`_fold_values_fast`) and replayed row by row through ``observe`` only
+on a miss.  A raw string that already folded cleanly is skipped — every
+lattice statistic is an idempotent max/min, so its repeat cannot change the
+schema or fail where it passed.
+
+Its four callers:
+
+- :func:`infer_path`: ``sc.textFile(path).mapPartitionsWithIndex(fold)``;
+  each partition emits one tiny record (line count, partial or first error),
+  so driver work is O(partitions × schema size) and line numbers are exact
+  from driver-side prefix sums, without a ``zipWithIndex`` job (SURVEY §7).
+- its FAILFAST re-scan: the same partition function with a seed schema and a
+  target partition;
+- :func:`infer_json_column`: the ``mapInPandas`` body over a string column;
+- :func:`infer_ndjson_strings`: one in-process fold (tests, tiny inputs).
 
 Error semantics (``FAILFAST``, the reference's behavior): the first bad line
-in *file order* aborts the run.  Because every partition stops at its first
-error, the first erroring partition in partition order always carries the
-globally-first error (its predecessors completed with full counts).  A
-cross-partition kind conflict that only surfaces in the driver's final merge
-triggers one targeted re-scan of the conflicting partition, seeded with the
-accumulated schema, to recover the exact line — an extra job on the error
-path only.  ``PERMISSIVE`` instead skips bad rows and returns sampled errors.
-
-``infer_json_column`` applies the same lattice to a DataFrame string column
-(e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
-fast path when the JSON is already a column rather than a raw file.
+in *file order* aborts the run.  Every partition stops at its first local
+error, but a row can also conflict only with the schema of the partitions
+before it.  So a partition that errors locally (after the first) or whose
+partial conflicts at the driver merge is folded once more, seeded with the
+schema of every partition before it, for its first error and exact line —
+an extra job on the error path only.  ``PERMISSIVE`` instead skips bad
+rows, settles kind conflicts by :func:`~.lattice.merge_lenient`'s fixed
+precedence, and returns sampled errors.
 """
 
 from __future__ import annotations
 
-import base64
 import json
 import pickle
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Iterator, List, Optional, Tuple
+from itertools import chain, islice
+from typing import Iterable, Iterator, List, Optional, Tuple
 
 from .errors import BadJson, SchemaGenError
 from .lattice import (
@@ -58,6 +65,14 @@ from .lattice import (
 from .render import render_definition, render_table
 
 _MAX_ERROR_SAMPLES = 20
+_BATCH_LINES = 8192
+# seen-set bounds: past these, parse instead of remember — correctness is
+# unaffected (dedup is an optimization).  Task memory is bounded in BYTES,
+# not just entries: a high-cardinality input of near-cap strings degrades
+# to plain parsing after ~16 MiB instead of growing to the 64 MiB product.
+_SEEN_CAP = 1 << 16
+_SEEN_MAX_LEN = 1 << 10
+_SEEN_MAX_BYTES = 1 << 24
 
 
 def _reject_constant(name: str):
@@ -97,18 +112,12 @@ class InferenceResult:
         return render_table(self.schema, name, file)
 
 
-# One record per partition: (pid, lines_seen, ok, payload)
-#   ok=True  → payload = (pickled partial descriptor, permissive error list)
-#   ok=False → payload = (local_line_of_first_error, pickled exception)
-_PartRec = Tuple[int, int, bool, bytes]
-
-
 def _observe_lenient(schema: Descriptor, value, detect_dates: bool = False) -> Descriptor:
     """PERMISSIVE fold step for a row that conflicts with the schema:
-    field-wise best-effort merge (conflicting fields keep the earlier kind,
-    clean fields still contribute).  This matches what ``merge_lenient``
-    does when the same rows land in *different* partitions, so the inferred
-    field set does not depend on partition boundaries.  A row whose value
+    ``merge_lenient`` of the row's descriptor, so a conflict is settled at
+    its own level by the fixed kind precedence and the row's clean fields
+    still contribute — the same join the driver applies to partials, so the
+    inferred types do not depend on partition boundaries.  A row whose value
     cannot even be described (e.g. a mixed-kind array) is skipped whole."""
     try:
         return merge_lenient(schema, describe(value, detect_dates=detect_dates))
@@ -116,179 +125,125 @@ def _observe_lenient(schema: Descriptor, value, detect_dates: bool = False) -> D
         return schema
 
 
-def _fold_partition(pid: int, it: Iterator[str], permissive: bool, detect_dates: bool = False):
-    schema: Descriptor = EMPTY_STRUCT
+def merge_partial(
+    schema: Descriptor, partial: Descriptor, permissive: bool
+) -> Tuple[Descriptor, Optional[SchemaGenError]]:
+    """Driver-side merge of one partial into the running schema; call it in
+    partition order so field order is first-seen.  A kind conflict raises
+    when strict; when ``permissive`` it is settled by ``merge_lenient`` and
+    returned so the caller can record it."""
+    try:
+        return merge(schema, partial), None
+    except SchemaGenError as e:
+        if not permissive:
+            raise
+        return merge_lenient(schema, partial), e
+
+
+def _fold(
+    schema: Descriptor,
+    lines: Iterable[Optional[str]],
+    permissive: bool,
+    detect_dates: bool = False,
+) -> Tuple[Descriptor, int, List[Tuple[int, str]]]:
+    """The schema fold: ``schema`` ⊔ every line, in batches.
+
+    Returns ``(schema, lines seen, sampled errors)``; errors are
+    ``(local line, message)`` in line order, at most 20.  ``None`` lines
+    (null cells) count but fold nothing.  FAILFAST (``permissive=False``)
+    raises the first error in line order with its local line number.
+    """
     n = 0
     errors: List[Tuple[int, str]] = []
-    for raw in it:
-        n += 1
-        try:
-            value = parse_line(raw)
-        except ValueError as e:
-            err: SchemaGenError = BadJson(raw, str(e), line=n)
-            if permissive:
-                if len(errors) < _MAX_ERROR_SAMPLES:
-                    errors.append((n, type(err).__name__ + ": " + str(e)))
-                continue
-            yield (pid, n, False, pickle.dumps(err))
-            return
-        try:
-            schema = observe(schema, value, line=n, detect_dates=detect_dates)
-        except SchemaGenError as e:
-            if permissive:
-                if len(errors) < _MAX_ERROR_SAMPLES:
-                    errors.append((n, type(e).__name__))
-                schema = _observe_lenient(schema, value, detect_dates)
-                continue
-            if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                e.raw = value
-            yield (pid, n, False, pickle.dumps(e))
-            return
-    yield (pid, n, True, pickle.dumps((schema, errors)))
+    seen: set = set()  # raw strings that already folded cleanly
+    seen_bytes = 0
 
+    def remember(raw: str) -> None:
+        nonlocal seen_bytes
+        if (
+            len(raw) <= _SEEN_MAX_LEN
+            and len(seen) < _SEEN_CAP
+            and seen_bytes + len(raw) <= _SEEN_MAX_BYTES
+        ):
+            seen.add(raw)
+            seen_bytes += len(raw)
 
-def _rescan_partition(target_pid: int, seed_b64: str, detect_dates: bool = False):
-    """Closure for the error-path re-scan: fold only ``target_pid`` seeded
-    with the schema accumulated from all earlier partitions, to recover the
-    exact line of a conflict first seen at driver merge time."""
+    def bad_line(line: int, raw: str, e: ValueError) -> None:
+        if not permissive:
+            raise BadJson(raw, str(e), line=line)
+        if len(errors) < _MAX_ERROR_SAMPLES:
+            errors.append((line, "BadJson: " + str(e)))
 
-    def f(pid: int, it: Iterator[str]):
-        if pid != target_pid:
-            return
-        schema: Descriptor = pickle.loads(base64.b64decode(seed_b64))
-        n = 0
-        for raw in it:
-            n += 1
+    it = iter(lines)
+    while True:
+        batch = list(islice(it, _BATCH_LINES))
+        if not batch:
+            return schema, n, errors
+        # each distinct raw string not yet folded is parsed once
+        parsed = dict.fromkeys(r for r in batch if r is not None and r not in seen)
+        bad = {}
+        for raw in parsed:
             try:
-                value = parse_line(raw)
+                parsed[raw] = parse_line(raw)
             except ValueError as e:
-                yield (n, pickle.dumps(BadJson(raw, str(e), line=n)))
-                return
+                bad[raw] = e
+        for raw in bad:
+            del parsed[raw]
+        try:
+            if detect_dates:  # the accumulators type every string VARCHAR
+                raise _FastPathMiss
+            schema = _fold_values_fast(schema, parsed.values())
+        except (_FastPathMiss, SchemaGenError):
+            pass  # the failed attempt left `schema` untouched: replay below
+        else:
+            # a clean batch: only its bad lines, if any, are left to visit
+            for raw in parsed:
+                remember(raw)
+            if bad:
+                for line, raw in enumerate(batch, n + 1):
+                    if raw in bad:
+                        bad_line(line, raw, bad[raw])
+            n += len(batch)
+            continue
+        # row by row: the exact first error (FAILFAST) or per-row
+        # degradation (PERMISSIVE), in line order
+        for raw in batch:
+            n += 1
+            if raw is None or raw in seen:
+                continue
+            if raw in bad:
+                bad_line(n, raw, bad[raw])
+                continue
+            if raw not in parsed:  # folded cleanly before the seen-set reset
+                parsed[raw] = parse_line(raw)
+            value = parsed[raw]
             try:
                 schema = observe(schema, value, line=n, detect_dates=detect_dates)
             except SchemaGenError as e:
-                if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                    e.raw = value
-                yield (n, pickle.dumps(e))
-                return
-
-    return f
-
-
-def infer_path(
-    spark,
-    path: str,
-    mode: str = "FAILFAST",
-    min_partitions: Optional[int] = None,
-    sampling_ratio: Optional[float] = None,
-    detect_dates: bool = False,
-) -> InferenceResult:
-    """Infer the schema of an NDJSON file/glob distributively.
-
-    ``mode="FAILFAST"`` reproduces the reference's first-bad-line abort with
-    an exact line number; ``"PERMISSIVE"`` skips bad rows and returns up to
-    20 sampled errors per partition.  ``sampling_ratio`` (like
-    ``spark.read.json``'s option) infers from a deterministic row sample —
-    line numbers are then relative to the sample and reported as None.
-    ``detect_dates`` (opt-in deviation, OFF for reference fidelity) types
-    ISO-8601 strings as DATE/TIMESTAMP.
-    """
-    permissive = mode.upper() == "PERMISSIVE"
-    sc = spark.sparkContext
-    rdd = sc.textFile(path, minPartitions=min_partitions) if min_partitions else sc.textFile(path)
-    sampled = sampling_ratio is not None and sampling_ratio < 1.0
-    if sampled:
-        rdd = rdd.sample(False, float(sampling_ratio), seed=42)
-
-    recs: List[_PartRec] = rdd.mapPartitionsWithIndex(
-        lambda pid, it: _fold_partition(pid, it, permissive, detect_dates)
-    ).collect()
-    recs.sort(key=lambda r: r[0])
-
-    # Prefix-sum the per-partition line counts → global line offsets.
-    offsets = {}
-    total = 0
-    for pid, n, _ok, _payload in recs:
-        offsets[pid] = total
-        total += n
-
-    # Single pass in partition (= file) order.  FAILFAST must report the
-    # first bad line in *file* order, and a locally-clean partition can
-    # still conflict with the schema accumulated from earlier partitions —
-    # so clean partials merge as we go (a merge conflict triggers a seeded
-    # re-scan for its exact line), and the first locally-erroring partition
-    # is *also* re-scanned seeded with everything before it: an early row of
-    # that partition may conflict cross-partition at a smaller line number
-    # than its local error.  Earlier partitions always win this way.
-    schema: Descriptor = EMPTY_STRUCT
-    all_errors: List[LineError] = []
-    first_pid = recs[0][0] if recs else None
-    for pid, n, ok, payload in recs:
-        if not ok:
-            err: SchemaGenError = pickle.loads(payload)
-            if pid == first_pid:
-                # no preceding schema: the local error IS the global first
-                local = err.line or n
-                raise err.with_line(None if sampled else offsets[pid] + local)
-            _raise_first_error_in_partition(
-                spark, rdd, pid, schema, offsets, sampled, detect_dates, fallback=err
-            )
-        partial, errors = pickle.loads(payload)
-        if permissive:
-            # conflicts that only surface across partitions degrade the same
-            # way as within a partition: earlier kind wins, error recorded
-            before = schema
-            schema = merge_lenient(schema, partial)
-            try:
-                merge(before, partial)
-            except SchemaGenError as e:
-                all_errors.append(
-                    LineError(None, f"{type(e).__name__} (cross-partition, kept earlier kind)")
-                )
-        else:
-            try:
-                schema = merge(schema, partial)
-            except SchemaGenError:
-                _raise_first_error_in_partition(
-                    spark, rdd, pid, schema, offsets, sampled, detect_dates
-                )
-        for local, msg in errors:
-            all_errors.append(
-                LineError(None if sampled else offsets[pid] + local, msg)
-            )
-    return InferenceResult(schema, total, all_errors)
-
-
-def _raise_first_error_in_partition(
-    spark, rdd, pid, schema, offsets, sampled, detect_dates=False, fallback=None
-):
-    """Error path only: re-fold partition ``pid`` seeded with the schema
-    accumulated from all earlier partitions and raise its first error (a
-    cross-partition kind conflict, a local conflict, or bad JSON — whichever
-    comes first in line order) with its exact global line number."""
-    seed = base64.b64encode(pickle.dumps(schema)).decode()
-    found = rdd.mapPartitionsWithIndex(
-        _rescan_partition(pid, seed, detect_dates)
-    ).collect()
-    if found:
-        local, payload = found[0]
-        err = pickle.loads(payload)
-        raise err.with_line(None if sampled else offsets[pid] + local)
-    if fallback is not None:  # pragma: no cover - rescan reproduces the fold
-        raise fallback
-    raise SchemaGenError(f"partition {pid} conflicts with prior schema")  # pragma: no cover
-
-
-# ---------------------------------------------------------------------------
-# DataFrame string-column inference (Arrow path)
-# ---------------------------------------------------------------------------
+                if not permissive:
+                    if getattr(e, "raw", None) is None and hasattr(e, "raw"):
+                        e.raw = value
+                    raise e.with_line(n)
+                if len(errors) < _MAX_ERROR_SAMPLES:
+                    errors.append((n, type(e).__name__))
+                before = schema
+                schema = _observe_lenient(schema, value, detect_dates)
+                try:
+                    merge(before, schema)
+                except SchemaGenError:
+                    # the row's kind won somewhere, so an earlier clean row
+                    # may conflict now: its repeats must be folded again
+                    seen.clear()
+                    seen_bytes = 0
+                continue
+            remember(raw)
 
 
 class _FastPathMiss(Exception):
     """Batch contains a shape the accumulator fast path doesn't cover."""
 
 
-def _fold_values_fast(schema: Descriptor, values: list) -> Descriptor:
+def _fold_values_fast(schema: Descriptor, values: Iterable) -> Descriptor:
     """Fold a batch of parsed rows via per-field accumulators.
 
     The common LLM-pipeline shape — flat objects of scalars — needs no
@@ -372,114 +327,131 @@ def _fold_values_fast(schema: Descriptor, values: list) -> Descriptor:
     return merge(schema, Struct(fields))
 
 
+def _fold_partitions(permissive, detect_dates, seed=EMPTY_STRUCT, target=None):
+    """``mapPartitionsWithIndex`` body of :func:`infer_path`: one record
+    ``(pid, lines, (partial, errors) or first error)`` per partition — or,
+    for the FAILFAST re-scan, only for partition ``target``, folded from
+    ``seed`` (the schema of every partition before it)."""
+
+    def f(pid: int, it: Iterator[str]):
+        if target is not None and pid != target:
+            return
+        try:
+            schema, n, errors = _fold(seed, it, permissive, detect_dates)
+        except SchemaGenError as e:
+            yield pid, e.line, e
+            return
+        yield pid, n, (schema, errors)
+
+    return f
+
+
+def infer_path(
+    spark,
+    path: str,
+    mode: str = "FAILFAST",
+    min_partitions: Optional[int] = None,
+    sampling_ratio: Optional[float] = None,
+    detect_dates: bool = False,
+) -> InferenceResult:
+    """Infer the schema of an NDJSON file/glob distributively.
+
+    ``mode="FAILFAST"`` reproduces the reference's first-bad-line abort with
+    an exact line number; ``"PERMISSIVE"`` skips bad rows and returns up to
+    20 sampled errors per partition.  ``sampling_ratio`` (like
+    ``spark.read.json``'s option, ``0 < ratio <= 1``) infers from a
+    deterministic row sample — line numbers are then relative to the sample
+    and reported as None.  ``detect_dates`` (opt-in deviation, OFF for
+    reference fidelity) types ISO-8601 strings as DATE/TIMESTAMP.
+    """
+    if sampling_ratio is not None and not 0 < sampling_ratio <= 1:
+        raise ValueError(f"sampling_ratio must be in (0, 1], got {sampling_ratio}")
+    permissive = mode.upper() == "PERMISSIVE"
+    sc = spark.sparkContext
+    rdd = sc.textFile(path, minPartitions=min_partitions) if min_partitions else sc.textFile(path)
+    sampled = sampling_ratio is not None and sampling_ratio < 1.0
+    if sampled:
+        rdd = rdd.sample(False, float(sampling_ratio), seed=42)
+
+    recs = rdd.mapPartitionsWithIndex(_fold_partitions(permissive, detect_dates)).collect()
+    recs.sort(key=lambda r: r[0])
+
+    # Prefix-sum the per-partition line counts → global line offsets.
+    offsets = {}
+    total = 0
+    for pid, n, _out in recs:
+        offsets[pid] = total
+        total += n
+
+    def raise_first_error(pid, seed):
+        """Error path only: re-fold partition ``pid`` from ``seed`` and raise
+        its first error — a cross-partition kind conflict, a local conflict
+        or bad JSON, whichever comes first in line order — at its global
+        line."""
+        rescan = _fold_partitions(False, detect_dates, seed, target=pid)
+        for _pid, local, err in rdd.mapPartitionsWithIndex(rescan).collect():
+            if isinstance(err, SchemaGenError):
+                raise err.with_line(None if sampled else offsets[pid] + local)
+        raise SchemaGenError(f"partition {pid} conflicts with prior schema")  # pragma: no cover
+
+    # Single pass in partition (= file) order.  FAILFAST must report the
+    # first bad line in *file* order, and a locally-clean partition can
+    # still conflict with the schema accumulated from earlier partitions —
+    # so clean partials merge as we go (a merge conflict triggers a seeded
+    # re-scan for its exact line), and the first locally-erroring partition
+    # is *also* re-scanned seeded with everything before it: an early row of
+    # that partition may conflict cross-partition at a smaller line number
+    # than its local error.  Earlier partitions always win this way.
+    schema: Descriptor = EMPTY_STRUCT
+    all_errors: List[LineError] = []
+    for pid, n, out in recs:
+        if isinstance(out, SchemaGenError):
+            if pid == recs[0][0]:  # no preceding schema: the local error IS the first
+                raise out.with_line(None if sampled else offsets[pid] + out.line)
+            raise_first_error(pid, schema)
+        partial, errors = out
+        try:
+            schema, conflict = merge_partial(schema, partial, permissive)
+        except SchemaGenError:
+            raise_first_error(pid, schema)
+        if conflict is not None:
+            all_errors.append(LineError(None, f"{type(conflict).__name__} (cross-partition)"))
+        for local, msg in errors:
+            all_errors.append(LineError(None if sampled else offsets[pid] + local, msg))
+    return InferenceResult(schema, total, all_errors)
+
+
 def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     """Infer the lattice schema of a JSON-bearing string column.
 
-    Uses ``mapInPandas``: each Arrow batch folds locally in Python, each task
-    emits one pickled partial descriptor; the driver merges partials in
-    partition order.  At cluster scale this moves only O(partitions) tiny
-    blobs to the driver.  Null cells are skipped (column-level nullability,
-    not a row error).
-
-    Flat batches of scalar fields take the accumulator fast path
-    (:func:`_fold_values_fast`, ~5× less Python per row); nested or
-    conflicting batches replay row-at-a-time for exact error/lenient
-    semantics.
-
-    Repeated raw strings are folded ONCE per task: inference is
-    multiplicity-insensitive — every lattice statistic (min/max bound,
-    max length, max scale, field set) is an idempotent monotone max/min,
-    so a value's second occurrence can never change the schema, and
-    real-world JSON columns are heavily repetitive (the events.props
-    benchmark column has 100 distinct values in 100 k rows — the dedup
-    collapses ~1000× of parse work).  The seen-set is bounded (entry count
-    and per-string length) so a genuinely high-cardinality column degrades
-    to plain parsing, never to unbounded task memory.
+    Uses ``mapInPandas``: each task runs :func:`_fold` over its Arrow
+    batches and emits one pickled partial descriptor; the driver merges
+    partials in partition order.  At cluster scale this moves only
+    O(partitions) tiny blobs to the driver.  Null cells are skipped
+    (column-level nullability, not a row error).  Real-world JSON columns
+    are heavily repetitive (the events.props benchmark column has 100
+    distinct values in 100 k rows), so the fold's parse-each-distinct-string
+    -once dedup collapses most of the parse work.
     """
     from pyspark import TaskContext
 
-    # seen-set bounds: past these, parse instead of remember — correctness
-    # is unaffected (dedup is an optimization).  Task memory is bounded in
-    # BYTES, not just entries: entry count × per-string length caps the
-    # worst case at 64 MiB, but the byte budget keeps the typical bound two
-    # orders lower — a high-cardinality column of near-cap strings degrades
-    # to plain parsing after ~16 MiB instead of growing to the product cap.
-    _SEEN_CAP = 1 << 16
-    _SEEN_MAX_LEN = 1 << 10
-    _SEEN_MAX_BYTES = 1 << 24
-
     def fold(batches):
-        import pandas as pd  # noqa: F401  (worker-side)
+        import pandas as pd  # worker-side
 
+        lines = chain.from_iterable(pdf[column].tolist() for pdf in batches)
+        schema, _, _ = _fold(EMPTY_STRUCT, lines, permissive)
         pid = TaskContext.get().partitionId()
-        schema: Descriptor = EMPTY_STRUCT
-        seen: set = set()
-        seen_bytes = 0
-        for pdf in batches:
-            values = []
-            for raw in pdf[column]:
-                if raw is None or raw in seen:
-                    continue
-                if (
-                    len(raw) <= _SEEN_MAX_LEN
-                    and len(seen) < _SEEN_CAP
-                    and seen_bytes + len(raw) <= _SEEN_MAX_BYTES
-                ):
-                    seen.add(raw)
-                    seen_bytes += len(raw)
-                try:
-                    values.append(parse_line(raw))
-                except ValueError:
-                    if not permissive:
-                        raise
-            try:
-                schema = _fold_values_fast(schema, values)
-            except (_FastPathMiss, SchemaGenError):
-                # replay the whole batch row-at-a-time: reproduces the exact
-                # first-row error (strict) / field-wise degradation
-                # (permissive); `schema` was not touched by the failed fast
-                # attempt, so no double counting
-                for value in values:
-                    try:
-                        schema = observe(schema, value)
-                    except SchemaGenError:
-                        if not permissive:
-                            raise
-                        schema = _observe_lenient(schema, value)
-        yield __import__("pandas").DataFrame(
-            {"pid": [pid], "blob": [pickle.dumps(schema)]}
-        )
+        yield pd.DataFrame({"pid": [pid], "blob": [pickle.dumps(schema)]})
 
-    parts = (
-        df.select(column)
-        .mapInPandas(fold, schema="pid int, blob binary")
-        .collect()
-    )
+    parts = df.select(column).mapInPandas(fold, schema="pid int, blob binary").collect()
     schema: Descriptor = EMPTY_STRUCT
     for row in sorted(parts, key=lambda r: r["pid"]):
-        partial = pickle.loads(bytes(row["blob"]))
-        if permissive:
-            schema = merge_lenient(schema, partial)
-        else:
-            schema = merge(schema, partial)
+        schema, _ = merge_partial(schema, pickle.loads(bytes(row["blob"])), permissive)
     return schema
 
 
 def infer_ndjson_strings(lines: Iterator[str], detect_dates: bool = False) -> InferenceResult:
     """Single-process fold over an iterable of lines (testing / tiny inputs).
     Semantics identical to the distributed path."""
-    schema: Descriptor = EMPTY_STRUCT
-    n = 0
-    for raw in lines:
-        n += 1
-        try:
-            value = parse_line(raw)
-        except ValueError as e:
-            raise BadJson(raw, str(e), line=n)
-        try:
-            schema = observe(schema, value, line=n, detect_dates=detect_dates)
-        except SchemaGenError as e:
-            if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                e.raw = value
-            raise e.with_line(n)
+    schema, n, _ = _fold(EMPTY_STRUCT, lines, False, detect_dates)
     return InferenceResult(schema, n)

@@ -29,7 +29,9 @@ the distributed aggregation.
 
 Cross-kind merges raise :class:`~.errors.RowMismatch`; mixed-kind array
 elements raise :class:`~.errors.InconsistentArray`
-(``Schemer.scala:16-30,37-38,61``).
+(``Schemer.scala:16-30,37-38,61``).  PERMISSIVE paths use
+``merge_lenient`` instead, which settles a kind conflict by a fixed kind
+precedence and is a join too.
 """
 
 from __future__ import annotations
@@ -375,27 +377,45 @@ def merge(a: Descriptor, b: Descriptor, line: Optional[int] = None) -> Descripto
     raise RowMismatch(a, b, line=line)
 
 
+# PERMISSIVE kind precedence (higher wins a kind conflict): structure over
+# scalars, so a row struct survives a non-object row, and numbers over
+# strings, so a numeric column keeps its type past a stray string.  Date
+# strings rank with strings: ``merge`` already joins the two losslessly.
+_LENIENT_RANK = {
+    "string": 0,
+    "timestamp": 0,
+    "boolean": 1,
+    "number": 2,
+    "array": 3,
+    "map": 4,
+    "struct": 5,
+}
+
+
 def merge_lenient(a: Descriptor, b: Descriptor) -> Descriptor:
-    """Best-effort merge for PERMISSIVE paths: kind conflicts keep the
-    *earlier* (left) descriptor instead of raising — field-wise for structs,
-    wholesale otherwise.  Mirrors the within-partition first-seen-kind-wins
-    behavior so results don't depend on partition boundaries."""
+    """Best-effort merge for PERMISSIVE paths: a kind conflict keeps the
+    side whose kind ranks higher in :data:`_LENIENT_RANK` instead of
+    raising.  Structs merge field by field, arrays element by element and
+    maps value by value, so a deep conflict is settled at its own level.
+
+    Unlike "earlier kind wins", this is commutative and associative in the
+    type it denotes (struct field order stays left-biased, as in ``merge``),
+    so PERMISSIVE results do not depend on how rows are partitioned or in
+    which order partials meet."""
     if isinstance(a, Struct) and isinstance(b, Struct):
         fields = dict(a.fields)
         for k, bv in b.fields.items():
             av = fields.get(k)
-            if av is None:
-                fields[k] = bv
-            else:
-                try:
-                    fields[k] = merge(av, bv)
-                except SchemaGenError:
-                    pass  # keep the earlier kind
+            fields[k] = bv if av is None else merge_lenient(av, bv)
         return Struct(fields)
+    if isinstance(a, Arr) and isinstance(b, Arr):
+        return Arr(merge_lenient(a.element, b.element))
+    if a.kind == "map" and b.kind == "map":
+        return type(a)(merge_lenient(a.value, b.value))
     try:
         return merge(a, b)
     except SchemaGenError:
-        return a if not isinstance(a, Unknown) else b
+        return a if _LENIENT_RANK[a.kind] >= _LENIENT_RANK[b.kind] else b
 
 
 def observe(

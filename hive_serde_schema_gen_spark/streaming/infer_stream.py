@@ -15,8 +15,8 @@ from __future__ import annotations
 import threading
 from typing import Optional
 
-from ..schema_infer import EMPTY_STRUCT, Descriptor, infer_json_column, merge
-from ..schema_infer.lattice import merge_lenient
+from ..schema_infer import EMPTY_STRUCT, Descriptor, infer_json_column
+from ..schema_infer.infer import merge_partial
 from ..schema_infer.render import render_definition
 
 
@@ -33,10 +33,7 @@ class StreamingSchemaAccumulator:
         # lenient across batches when permissive: a cross-batch kind
         # conflict must not terminate the StreamingQuery
         with self._lock:
-            if self.permissive:
-                self.schema = merge_lenient(self.schema, partial)
-            else:
-                self.schema = merge(self.schema, partial)
+            self.schema, _ = merge_partial(self.schema, partial, self.permissive)
             self.rows += n_rows
 
     def definition(self) -> str:

@@ -64,6 +64,18 @@ def test_schema_gen_dispatch_unaffected(tmp_path, capsys):
     assert "CREATE TABLE t (" in capsys.readouterr().out
 
 
+def test_schema_gen_rejects_sampling_ratio_outside_unit_interval(tmp_path, capsys):
+    # 0 used to print an empty CREATE TABLE and exit 0; a negative ratio
+    # surfaced Spark's own error — both are usage errors now
+    nd = tmp_path / "rows.json"
+    nd.write_text('{"a": 1}\n')
+    for ratio in ("0", "-0.5", "1.5"):
+        with pytest.raises(SystemExit) as ei:
+            main([str(nd), "--sampling-ratio", ratio])
+        assert ei.value.code == 2
+        assert "--sampling-ratio" in capsys.readouterr().err
+
+
 def test_media_dedup_command(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -45,6 +45,31 @@ def test_error_line_numbers_distributed(spark, tmp_path):
     assert ei.value.line == 58  # 1-based
 
 
+def test_failfast_line_in_file_name_order_over_a_glob(spark, tmp_path):
+    """Global FAILFAST lines count files in NAME order, one partition per
+    file: files a..e grow with their names (so a size-ordered split
+    would put e first), and the conflict planted in the last-named file is
+    reported at its line after all of a..d."""
+    sizes = {"a": 10, "b": 20, "c": 40, "d": 80, "e": 160}
+    for name, n in sizes.items():
+        rows = ['{"v": %d, "pad": "%s"}' % (i, name * 50) for i in range(n)]
+        if name == "e":
+            rows[6] = '{"v": "oops"}'  # local line 7
+        (tmp_path / f"{name}.json").write_text("\n".join(rows) + "\n")
+    with pytest.raises(RowMismatch) as ei:
+        infer_path(spark, str(tmp_path / "*.json"))
+    assert ei.value.line == 10 + 20 + 40 + 80 + 7
+
+
+def test_sampling_ratio_must_be_a_fraction(spark, tmp_path):
+    p = tmp_path / "rows.json"
+    p.write_text('{"v": 1}\n')
+    for bad in (0, 0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="sampling_ratio"):
+            infer_path(spark, str(p), sampling_ratio=bad)
+    assert infer_path(spark, str(p), sampling_ratio=1.0).lines == 1
+
+
 def test_permissive_skips_bad_rows(spark, tmp_path):
     p = tmp_path / "mixed.json"
     p.write_text('{"v": 1}\n{not json\n{"v": "x"}\n{"v": 300}\n')

@@ -51,6 +51,20 @@ def test_merge_lenient_keeps_earlier_kind():
     assert render_definition(m) == "v TINYINT,\nw VARCHAR(3)"
 
 
+def test_merge_lenient_precedence_not_arrival_order():
+    """The PERMISSIVE winner of a kind conflict is fixed by kind, whichever
+    side comes first, at any depth; a non-object row never replaces the
+    row struct."""
+    a = describe({"v": "oops", "n": {"x": ["s"]}})
+    b = describe({"v": 1, "n": {"x": [2]}})
+    want = "v TINYINT,\nn STRUCT<\n\tx: ARRAY<\n\t\tTINYINT\n\t>\n>"
+    assert render_definition(merge_lenient(a, b)) == want
+    assert render_definition(merge_lenient(b, a)) == want
+    for row in (5, "s", [1], True):
+        assert merge_lenient(b, describe(row)) == b
+        assert merge_lenient(describe(row), b) == b
+
+
 def test_evolve_narrowing_is_not_widening():
     old = infer_ndjson_strings(iter(['{"s": "abcdefghij"}'])).schema  # VARCHAR(10)
     new = infer_ndjson_strings(iter(['{"s": "abc"}'])).schema  # VARCHAR(3)
