@@ -13,9 +13,12 @@ import pytest
 
 from hive_serde_schema_gen_spark.operators.multimodal import (
     _bmp_encode,
+    _video_encode,
     _wav_encode,
+    audio_fingerprints,
     dedup_media_corpus,
     image_hashes,
+    video_fingerprints,
 )
 
 
@@ -84,39 +87,54 @@ def test_audio_stages(spark):
     assert dict(acct)["byte_unique"] == 3
 
 
-def test_image_index_probe_and_extend(spark, idx_dir):
-    from hive_serde_schema_gen_spark.operators.phash_index import (
-        build_phash_index,
+@pytest.mark.parametrize(
+    "modality,id_col,encode",
+    [
+        ("image", "img_id", _bmp_encode),
+        ("audio", "aud_id", _wav_encode),
+        ("video", "vid_id", _video_encode),
+    ],
+    ids=["image", "audio", "video"],
+)
+def test_image_index_probe_and_extend(spark, idx_dir, modality, id_col, encode):
+    from hive_serde_schema_gen_spark.operators import (
+        afp_index,
+        phash_index,
+        vfp_index,
     )
 
+    build, fingerprint = {
+        "image": (phash_index.build_phash_index, image_hashes),
+        "audio": (afp_index.build_afp_index, audio_fingerprints),
+        "video": (vfp_index.build_vfp_index, video_fingerprints),
+    }[modality]
+    schema = f"{id_col} long, payload binary"
     history = spark.createDataFrame(
-        [(100, _bmp_encode(1, b"the one true image body, with pixels"))],
-        "img_id long, payload binary",
+        [(100, encode(1, b"the one true image body, with pixels"))], schema
     )
-    build_phash_index(image_hashes(history), idx_dir, n_files=1)
+    build(fingerprint(history), idx_dir, n_files=1)
     acct: list = []
     d = spark.createDataFrame(
         [
-            (1, _bmp_encode(1, b"the one true image body, with pixels")),
-            (4, _bmp_encode(4, b"a completely different image payload")),
+            (1, encode(1, b"the one true image body, with pixels")),
+            (4, encode(4, b"a completely different image payload")),
         ],
-        "img_id long, payload binary",
+        schema,
     )
     kept, attr, _ = dedup_media_corpus(
-        d, "image", index_path=idx_dir, extend_epoch=7, accounting=acct
+        d, modality, index_path=idx_dir, extend_epoch=7, accounting=acct
     )
-    a = {r["img_id"]: (r["dup_of"], r["stage"]) for r in attr.collect()}
+    a = {r[id_col]: (r["dup_of"], r["stage"]) for r in attr.collect()}
     assert a[1] == (100, "index")  # history match, attributed to the index
-    assert {r["img_id"] for r in kept.collect()} == {4}
-    # the accepted novel image extended the index: a re-run of the same
+    assert {r[id_col] for r in kept.collect()} == {4}
+    # the accepted novel payload extended the index: a re-run of the same
     # novel payload under a NEW id now matches history
     d2 = spark.createDataFrame(
-        [(9, _bmp_encode(4, b"a completely different image payload"))],
-        "img_id long, payload binary",
+        [(9, encode(4, b"a completely different image payload"))], schema
     )
-    kept2, attr2, _ = dedup_media_corpus(d2, "image", index_path=idx_dir)
+    kept2, attr2, _ = dedup_media_corpus(d2, modality, index_path=idx_dir)
     assert kept2.count() == 0
-    a2 = {r["img_id"]: (r["dup_of"], r["stage"]) for r in attr2.collect()}
+    a2 = {r[id_col]: (r["dup_of"], r["stage"]) for r in attr2.collect()}
     assert a2[9] == (4, "index")
 
 
