@@ -272,7 +272,9 @@ def main(argv=None) -> int:
         return 1
     print(result.table(args.table, args.file))
     for err in result.errors:
-        print(f"skipped line {err.line}: {err.message}", file=sys.stderr)
+        # cross-partition conflicts and sampled rows have no line number
+        where = "" if err.line is None else f" line {err.line}"
+        print(f"skipped{where}: {err.message}", file=sys.stderr)
     return 0
 
 

@@ -119,6 +119,16 @@ from .media_corpus import (  # noqa: F401
     decode_drop_report,
     dedup_media_corpus,
 )
+from .phash_index import (
+    AUDIO,
+    IMAGE,
+    VIDEO,
+    build_phash_index,
+    extend_phash_index,
+    novel_rows,
+    phash_against_index,
+)
+from .scratch import with_slot_scratch
 
 
 def with_payload(df):
@@ -229,6 +239,54 @@ def multimodal_decode_features(spark, sf_dir):
 # documents.text is ASCII in the testdata (asserted cheap via octet_length =
 # length in the oracle would be redundant; ascii() = byte value holds).
 # ---------------------------------------------------------------------------
+
+
+def _index_lifecycle_rows(family, fps, variant_offset: int, tag: str):
+    """op='<tag>probe'/'<tag>novel' rows: the PERSISTED index lifecycle
+    (``operators/phash_index.py``) of one perceptual ``family``, driven at
+    query time — build on the even base ids, EXTEND with the odd half (a
+    dropped extend batch breaks the hash), probe with the planted
+    variants (ids >= ``variant_offset``).  Exact recall at the default
+    radius means the oracle's brute-force base×variant pair set IS the
+    probe's contract.  The temp index lives only inside
+    with_slot_scratch (round-13 hygiene)."""
+    idc = family.id_col
+    base = fps.filter(F.col(idc) < variant_offset)
+    variants = fps.filter(F.col(idc) >= variant_offset)
+
+    def _build(path):
+        build_phash_index(
+            base.filter(F.col(idc) % 2 == 0), path, n_files=4, family=family
+        )
+        extend_phash_index(
+            base.filter(F.col(idc) % 2 == 1), path, epoch=7, family=family
+        )
+        # Materialize the probe ONCE: novel is an anti-join against the
+        # match set, so a lazy m would re-run the whole index-probe
+        # pipeline when with_slot_scratch checkpoints the novel frame.
+        m = phash_against_index(
+            variants, path, family=family
+        ).localCheckpoint()
+        return m, novel_rows(variants, m, family=family).select(idc)
+
+    matches, novel = with_slot_scratch(f"{family.name}-idx-slot-", _build)
+    probe_rows = matches.select(
+        F.lit(f"{tag}probe").alias("op"),
+        F.col(idc).alias("doc_id"),
+        F.col("dist").cast("int").alias("idx"),
+        F.lit(0).alias("width"),
+        F.lit(0).alias("height"),
+        F.col(f"matched_{idc}").alias("checksum"),
+    )
+    novel_out = novel.select(
+        F.lit(f"{tag}novel").alias("op"),
+        F.col(idc).alias("doc_id"),
+        F.lit(0).alias("idx"),
+        F.lit(0).alias("width"),
+        F.lit(0).alias("height"),
+        F.lit(None).cast("long").alias("checksum"),
+    )
+    return probe_rows, novel_out
 
 
 @query(
@@ -493,10 +551,11 @@ def multimodal_resize_frames(spark, sf_dir):
     brought under the hash gate):
 
     - ``aprobe`` / ``anovel`` and ``vprobe`` / ``vnovel`` rows: the
-      persisted AFP/VFP index lifecycles (``afp_index`` / ``vfp_index``
-      — build on the even base ids, EXTEND with the odd half, probe
-      with the planted variants), vs the oracle's brute base×variant
-      pair sets — the image family's ``pprobe``/``pnovel`` discipline.
+      persisted index lifecycle (``phash_index`` with
+      ``family=AUDIO`` / ``VIDEO`` — build on the even base ids, EXTEND
+      with the odd half, probe with the planted variants), vs the
+      oracle's brute base×variant pair sets — the image family's
+      ``pprobe``/``pnovel`` discipline.
     - ``vclust`` rows: ``media_dup_clusters`` transitive lineage (near-
       dup pairs + keep-first attribution → ``connected_components``
       min-id labels) vs a recursive-reachability SQL re-derivation.
@@ -531,7 +590,6 @@ def multimodal_resize_frames(spark, sf_dir):
     # §2.6): one family's distributed jobs back-fill executors idled by
     # another's driver-side phases.  Every step is deterministic and
     # family-local, so overlap cannot change any result row.
-    from .scratch import with_slot_scratch
 
     def _image_family():
         # three consumers (dhash rows, ahash rows, the pair self-join) read
@@ -571,53 +629,9 @@ def multimodal_resize_frames(spark, sf_dir):
             F.lit(0).alias("height"),
             F.col("dup_of").alias("checksum"),
         )
-        # op='pprobe'/'pnovel': the PERSISTED index lifecycle
-        # (operators/phash_index.py) driven at query time — build on the
-        # even base ids, EXTEND with the odd half (a dropped extend batch
-        # breaks the hash), probe with the planted variants.  Exact recall
-        # at the default radius means the oracle's brute-force base×variant
-        # pair set IS the probe's contract.  The temp index lives only
-        # inside with_slot_scratch (round-13 hygiene).
-        from .phash_index import (
-            build_phash_index,
-            extend_phash_index,
-            novel_images,
-            phash_against_index,
-        )
-        from .scratch import with_slot_scratch
-
-        base = hashed.filter(F.col("img_id") < PHASH_UP_OFFSET)
-        variants = hashed.filter(F.col("img_id") >= PHASH_UP_OFFSET)
-
-        def _idx_build(path):
-            build_phash_index(
-                base.filter(F.col("img_id") % 2 == 0), path, n_files=4
-            )
-            extend_phash_index(
-                base.filter(F.col("img_id") % 2 == 1), path, epoch=7
-            )
-            # Materialize the probe ONCE: novel is an anti-join against the
-            # match set, so a lazy m would re-run the whole index-probe
-            # pipeline when with_slot_scratch checkpoints the novel frame.
-            m = phash_against_index(variants, path).localCheckpoint()
-            return m, novel_images(variants, m).select("img_id")
-
-        matches, novel = with_slot_scratch("ph-idx-slot-", _idx_build)
-        pprobe = matches.select(
-            F.lit("pprobe").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_img_id").alias("checksum"),
-        )
-        pnovel = novel.select(
-            F.lit("pnovel").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
+        # op='pprobe'/'pnovel': the persisted image-index lifecycle
+        pprobe, pnovel = _index_lifecycle_rows(
+            IMAGE, hashed, PHASH_UP_OFFSET, "p"
         )
         return dh, ah, pdup, pded, pprobe, pnovel
 
@@ -650,46 +664,10 @@ def multimodal_resize_frames(spark, sf_dir):
             F.lit(0).alias("height"),
             F.col("dup_of").alias("checksum"),
         )
-        # round-17: op='aprobe'/'anovel' — the PERSISTED audio-index
-        # lifecycle (operators/afp_index.py), the image family's
-        # build→extend→probe discipline under the audio meta pin.
-        from .afp_index import (
-            afp_against_index,
-            build_afp_index,
-            extend_afp_index,
-            novel_clips,
-        )
-
-        a_base = afps.filter(F.col("aud_id") < PHASH_UP_OFFSET)
-        a_var = afps.filter(F.col("aud_id") >= PHASH_UP_OFFSET)
-
-        def _aidx_build(path):
-            build_afp_index(
-                a_base.filter(F.col("aud_id") % 2 == 0), path, n_files=4
-            )
-            extend_afp_index(
-                a_base.filter(F.col("aud_id") % 2 == 1), path, epoch=7
-            )
-            # one probe materialization serves matches AND the novel anti-join
-            m = afp_against_index(a_var, path).localCheckpoint()
-            return m, novel_clips(a_var, m).select("aud_id")
-
-        amatches, anovel_df = with_slot_scratch("afp-idx-slot-", _aidx_build)
-        aprobe = amatches.select(
-            F.lit("aprobe").alias("op"),
-            F.col("aud_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_aud_id").alias("checksum"),
-        )
-        anovel = anovel_df.select(
-            F.lit("anovel").alias("op"),
-            F.col("aud_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
+        # round-17: op='aprobe'/'anovel' — the persisted audio-index
+        # lifecycle under the audio meta pin.
+        aprobe, anovel = _index_lifecycle_rows(
+            AUDIO, afps, PHASH_UP_OFFSET, "a"
         )
         return af, ap, ad, aprobe, anovel
 
@@ -728,46 +706,10 @@ def multimodal_resize_frames(spark, sf_dir):
             F.lit(0).alias("height"),
             F.col("dup_of").alias("checksum"),
         )
-        # round-17: op='vprobe'/'vnovel' — the persisted VIDEO-index
-        # lifecycle (operators/vfp_index.py), same discipline under the
-        # video grid pin.
-        from .vfp_index import (
-            build_vfp_index,
-            extend_vfp_index,
-            novel_videos,
-            vfp_against_index,
-        )
-
-        v_base = vfps.filter(F.col("vid_id") < VFP_DUP_OFFSET)
-        v_var = vfps.filter(F.col("vid_id") >= VFP_DUP_OFFSET)
-
-        def _vidx_build(path):
-            build_vfp_index(
-                v_base.filter(F.col("vid_id") % 2 == 0), path, n_files=4
-            )
-            extend_vfp_index(
-                v_base.filter(F.col("vid_id") % 2 == 1), path, epoch=7
-            )
-            # one probe materialization serves matches AND the novel anti-join
-            m = vfp_against_index(v_var, path).localCheckpoint()
-            return m, novel_videos(v_var, m).select("vid_id")
-
-        vmatches, vnovel_df = with_slot_scratch("vfp-idx-slot-", _vidx_build)
-        vprobe = vmatches.select(
-            F.lit("vprobe").alias("op"),
-            F.col("vid_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_vid_id").alias("checksum"),
-        )
-        vnovel = vnovel_df.select(
-            F.lit("vnovel").alias("op"),
-            F.col("vid_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
+        # round-17: op='vprobe'/'vnovel' — the persisted video-index
+        # lifecycle under the video grid pin.
+        vprobe, vnovel = _index_lifecycle_rows(
+            VIDEO, vfps, VFP_DUP_OFFSET, "v"
         )
         # round-17: op='vclust' — media_dup_clusters' transitive lineage
         # (pairs + keep-first attribution → connected_components min-id

@@ -42,9 +42,9 @@ from typing import Any, Optional, Union
 from .errors import InconsistentArray, RowMismatch, SchemaGenError
 
 # ---------------------------------------------------------------------------
-# Descriptors.  Plain classes with __slots__: allocated once per *distinct
-# shape*, mutated in the per-partition fold (observe) for speed, merged
-# immutably across partials (merge).  All picklable.
+# Descriptors.  Plain immutable classes with __slots__, allocated once per
+# *distinct shape*: ``merge`` always builds new descriptors and never
+# mutates its arguments, so descriptors are shared freely.  All picklable.
 # ---------------------------------------------------------------------------
 
 
@@ -52,18 +52,12 @@ class Descriptor:
     __slots__ = ()
     kind = "?"
 
-    def copy(self) -> "Descriptor":
-        raise NotImplementedError
-
 
 class Unknown(Descriptor):
     """Bottom type: only nulls observed (renders ``???``, Schemer.scala:70)."""
 
     __slots__ = ()
     kind = "unknown"
-
-    def copy(self) -> "Unknown":
-        return UNKNOWN
 
     def __repr__(self) -> str:
         return "Unknown()"
@@ -81,9 +75,6 @@ UNKNOWN = Unknown()
 class Bool(Descriptor):
     __slots__ = ()
     kind = "boolean"
-
-    def copy(self) -> "Bool":
-        return BOOL
 
     def __repr__(self) -> str:
         return "Bool()"
@@ -113,9 +104,6 @@ class Str(Descriptor):
     def __init__(self, max_len: int = 0):
         self.max_len = max_len
 
-    def copy(self) -> "Str":
-        return Str(self.max_len)
-
     def __repr__(self) -> str:
         return f"Str(max_len={self.max_len})"
 
@@ -142,9 +130,6 @@ class Ts(Descriptor):
     def __init__(self, max_len: int, has_time: bool):
         self.max_len = max_len
         self.has_time = has_time
-
-    def copy(self) -> "Ts":
-        return Ts(self.max_len, self.has_time)
 
     def __repr__(self) -> str:
         return f"Ts(max_len={self.max_len}, has_time={self.has_time})"
@@ -181,9 +166,6 @@ class Num(Descriptor):
         self.hi = hi
         self.max_scale = max_scale
 
-    def copy(self) -> "Num":
-        return Num(self.lo, self.hi, self.max_scale)
-
     def __repr__(self) -> str:
         return f"Num(lo={self.lo}, hi={self.hi}, max_scale={self.max_scale})"
 
@@ -214,9 +196,6 @@ class Arr(Descriptor):
     def __init__(self, element: Descriptor):
         self.element = element
 
-    def copy(self) -> "Arr":
-        return Arr(self.element.copy())
-
     def __repr__(self) -> str:
         return f"Arr({self.element!r})"
 
@@ -239,9 +218,6 @@ class Struct(Descriptor):
 
     def __init__(self, fields: Optional[dict] = None):
         self.fields = fields if fields is not None else {}
-
-    def copy(self) -> "Struct":
-        return Struct({k: v.copy() for k, v in self.fields.items()})
 
     def __repr__(self) -> str:
         return f"Struct({self.fields!r})"
@@ -473,9 +449,6 @@ class MapOf(Descriptor):
     def __init__(self, value: Descriptor):
         self.value = value
 
-    def copy(self) -> "MapOf":
-        return MapOf(self.value.copy())
-
     def __repr__(self) -> str:
         return f"MapOf({self.value!r})"
 
@@ -517,7 +490,7 @@ def structs_to_maps(
         unified: Descriptor = Unknown()
         try:
             for v in desc.fields.values():
-                unified = merge(unified.copy(), v.copy())
+                unified = merge(unified, v)
         except SchemaGenError:
             unified = None  # heterogeneous values: keep the struct
         if unified is not None and not isinstance(unified, Unknown):

@@ -37,32 +37,33 @@ from .lattice import (
 
 VARCHAR_MAX = 65535  # Hive's real bound; reference typo'd 65356 (Schemer.scala:73)
 
-_TINY_MIN, _TINY_MAX = -128, 127
-_SMALL_MIN, _SMALL_MAX = -32768, 32767
-_INT_MIN, _INT_MAX = -2147483648, 2147483647
-_LONG_MIN, _LONG_MAX = -9223372036854775808, 9223372036854775807
+#: The integer ladder: the narrowest tier whose [min, max] holds the column.
+_INT_LADDER = (
+    ("TINYINT", -(2**7), 2**7 - 1),
+    ("SMALLINT", -(2**15), 2**15 - 1),
+    ("INT", -(2**31), 2**31 - 1),
+    ("BIGINT", -(2**63), 2**63 - 1),
+)
 
 
-def _numeric_type(num: Num) -> str:
-    """The VARCHAR/int-ladder/FLOAT/DOUBLE/NUMERIC decision tree
-    (``Schemer.scala:77-85``), with min/max bounds instead of a max exemplar."""
+def numeric_tier(num: Num) -> tuple[str, int, int]:
+    """The int-ladder/FLOAT/DOUBLE/NUMERIC decision tree
+    (``Schemer.scala:77-85``), with min/max bounds instead of a max
+    exemplar: ``(tier, precision, scale)`` with ``tier`` one of the
+    ``_INT_LADDER`` names, ``FLOAT``, ``DOUBLE`` or ``NUMERIC``.  The DDL
+    renderer and the Spark-type bridge both map this one result."""
     if num.max_scale == 0:
         lo, hi = int(num.lo), int(num.hi)
-        if _TINY_MIN <= lo and hi <= _TINY_MAX:
-            return "TINYINT"
-        if _SMALL_MIN <= lo and hi <= _SMALL_MAX:
-            return "SMALLINT"
-        if _INT_MIN <= lo and hi <= _INT_MAX:
-            return "INT"
-        if _LONG_MIN <= lo and hi <= _LONG_MAX:
-            return "BIGINT"
-        return f"NUMERIC({num_bounds_precision(num)}, 0)"
+        for tier, tmin, tmax in _INT_LADDER:
+            if tmin <= lo and hi <= tmax:
+                return tier, 0, 0
+        return "NUMERIC", num_bounds_precision(num), 0
     p = num_bounds_precision(num)
     if p <= 7:
-        return "FLOAT"
+        return "FLOAT", p, num.max_scale
     if p <= 15:
-        return "DOUBLE"
-    return f"NUMERIC({p}, {num.max_scale})"
+        return "DOUBLE", p, num.max_scale
+    return "NUMERIC", p, num.max_scale
 
 
 def render_type(desc: Descriptor, indent: int = 0, key: str | None = None) -> str:
@@ -82,7 +83,8 @@ def render_type(desc: Descriptor, indent: int = 0, key: str | None = None) -> st
             return prefix + f"VARCHAR({n})"
         return prefix + "STRING"
     if isinstance(desc, Num):
-        return prefix + _numeric_type(desc)
+        tier, p, s = numeric_tier(desc)
+        return prefix + (f"NUMERIC({p}, {s})" if tier == "NUMERIC" else tier)
     if isinstance(desc, Arr):
         return "\n".join(
             [prefix + "ARRAY<", render_type(desc.element, indent + 1), pad + ">"]

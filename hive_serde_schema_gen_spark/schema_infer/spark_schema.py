@@ -26,9 +26,17 @@ from .lattice import (
     Struct,
     Ts,
     Unknown,
-    num_bounds_precision,
 )
-from .render import VARCHAR_MAX
+from .render import VARCHAR_MAX, numeric_tier
+
+_SPARK_TIERS = {
+    "TINYINT": T.ByteType,
+    "SMALLINT": T.ShortType,
+    "INT": T.IntegerType,
+    "BIGINT": T.LongType,
+    "FLOAT": T.FloatType,
+    "DOUBLE": T.DoubleType,
+}
 
 
 def to_spark_type(
@@ -55,23 +63,10 @@ def to_spark_type(
             return T.VarcharType(n)
         return T.StringType()
     if isinstance(desc, Num):
-        if desc.max_scale == 0:
-            lo, hi = int(desc.lo), int(desc.hi)
-            if -128 <= lo and hi <= 127:
-                return T.ByteType()
-            if -32768 <= lo and hi <= 32767:
-                return T.ShortType()
-            if -2147483648 <= lo and hi <= 2147483647:
-                return T.IntegerType()
-            if -(2**63) <= lo and hi <= 2**63 - 1:
-                return T.LongType()
-            return T.DecimalType(min(num_bounds_precision(desc), 38), 0)
-        p = num_bounds_precision(desc)
-        if p <= 7:
-            return T.FloatType()
-        if p <= 15:
-            return T.DoubleType()
-        return T.DecimalType(min(p, 38), min(desc.max_scale, 38))
+        tier, p, s = numeric_tier(desc)
+        if tier == "NUMERIC":
+            return T.DecimalType(min(p, 38), min(s, 38))
+        return _SPARK_TIERS[tier]()
     if isinstance(desc, Arr):
         return T.ArrayType(
             to_spark_type(desc.element, unknown_as_string, varchar_as_string), True

@@ -31,6 +31,14 @@ semantically harmless (the probe's candidate `distinct` collapses them;
 signature rows per doc are identical copies) and are reclaimed by the
 next ``build_minhash_index`` compaction — cheaper than a transactional
 ledger on the hot ingest path.
+
+The perceptual media families (``phash_index.IMAGE``/``AUDIO``/``VIDEO``)
+ride the same discipline through ONE family-parameterised driver,
+:func:`process_media_ingest_batch` / :func:`start_media_ingest`: the
+batch is fingerprinted, probed against the persisted fingerprint index,
+and its duplicated appends are reclaimed by ``compact_phash_index``.
+Both editions share :func:`_replay_safe_novel` — the re-delivery guard
+and the batch-self-match exclusion exist once.
 """
 
 from __future__ import annotations
@@ -39,56 +47,80 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import keep_first_per_content
-from ..operators.dedup_index import (
-    dedup_against_index,
-    extend_minhash_index,
-    novel_docs,
+from ..operators.dedup_index import dedup_against_index, extend_minhash_index
+from ..operators.phash_index import (
+    Family,
+    extend_phash_index,
+    phash_against_index,
 )
+
+
+def _replay_safe_novel(
+    batch: DataFrame,
+    epoch_id: int,
+    id_col: str,
+    indexed: DataFrame | None,
+    probe,
+) -> DataFrame | None:
+    """The replay-correctness joins, ONE definition for every family (text
+    and the perceptual media families): cross-epoch re-delivery rejection
+    → index probe with batch-self matches excluded → checkpointed novel
+    survivors, or None when the guard leaves nothing.  Two copies would
+    drift.
+
+    ``batch`` is the probe-ready, checkpointed frame keyed on ``id_col``;
+    ``indexed`` the index's ``(id_col, epoch)`` rows (None: an index
+    without epoch stamps, where no re-delivery can be attributed);
+    ``probe(batch)`` returns ``(id_col, matched_<id_col>, …)`` pairs.
+
+    Re-delivery guard: an id already in the index under a DIFFERENT epoch
+    (or a None epoch: batch-built history) is a re-sent id — without this
+    it would match its own index entry, have the match discarded as a
+    batch-self match, and be silently re-admitted.  Same-epoch entries
+    are this epoch's own replayed extend and must NOT reject (that is the
+    data-loss replay bug the self-match exclusion fixes).  Scale shape:
+    the index side is a column-pruned (id, epoch) scan semi-joined
+    against the BROADCAST batch ids — map-side over the index scan, the
+    hits are <= batch-sized, and the final anti-join broadcasts them."""
+    if indexed is not None:
+        foreign = (
+            indexed.filter(~F.col("epoch").eqNullSafe(F.lit(epoch_id)))
+            .select(id_col)
+            .join(F.broadcast(batch.select(id_col)), id_col, "left_semi")
+            .distinct()
+        )
+        batch = batch.join(
+            F.broadcast(foreign), id_col, "left_anti"
+        ).localCheckpoint()
+        if batch.isEmpty():
+            return None
+    matched = f"matched_{id_col}"
+    matches = probe(batch).join(
+        batch.select(F.col(id_col).alias(matched)), matched, "left_anti"
+    )
+    return batch.join(
+        matches.select(id_col).distinct(), id_col, "left_anti"
+    ).localCheckpoint()
 
 
 def _novel_for_batch(
     batch: DataFrame, index_path: str, intra_batch: bool, epoch_id: int
 ) -> DataFrame | None:
-    """The shared probe pipeline: [intra-batch exact dedup] → cross-epoch
-    re-delivery rejection → index probe (broadcast batch, index never
-    shuffles; batch-self matches excluded — see module docstring) →
-    checkpointed novel survivors.  ONE definition on purpose: the
-    re-delivery guard and the batch-self-match exclusion are the subtle
-    replay-correctness joins, and two copies would drift.
-
-    Re-delivery guard: a doc_id already in the index under a DIFFERENT
-    epoch (or a None epoch: batch-built history) is a re-sent id — without
-    this it would match its own index entry, have the match discarded as
-    a batch-self match, and be silently re-admitted.  Same-epoch entries
-    are this epoch's own replayed extend and must NOT reject (that is the
-    data-loss replay bug the self-match exclusion fixes).  Scale shape:
-    the index side is a column-pruned (doc_id, epoch) scan semi-joined
-    against the BROADCAST batch ids — map-side over the index scan, the
-    hits are <= batch-sized, and the final anti-join broadcasts them."""
+    """The text probe pipeline: [intra-batch exact dedup] → the shared
+    replay-safe probe (broadcast batch, index never shuffles)."""
     if batch.isEmpty():
         return None
     batch = batch.localCheckpoint()  # reused by probe + anti-join
     if intra_batch:
         batch = keep_first_per_content(batch).localCheckpoint()
     sigs = batch.sparkSession.read.parquet(f"{index_path}/sigs")
-    if "epoch" in sigs.columns:
-        foreign = (
-            sigs.filter(~F.col("epoch").eqNullSafe(F.lit(epoch_id)))
-            .select("doc_id")
-            .join(F.broadcast(batch.select("doc_id")), "doc_id", "left_semi")
-            .distinct()
-        )
-        batch = batch.join(
-            F.broadcast(foreign), "doc_id", "left_anti"
-        ).localCheckpoint()
-        if batch.isEmpty():
-            return None
-    matches = dedup_against_index(batch, index_path).join(
-        batch.select(F.col("doc_id").alias("matched_doc_id")),
-        "matched_doc_id",
-        "left_anti",
+    return _replay_safe_novel(
+        batch,
+        epoch_id,
+        "doc_id",
+        sigs if "epoch" in sigs.columns else None,
+        lambda b: dedup_against_index(b, index_path),
     )
-    return novel_docs(batch, matches).localCheckpoint()
 
 
 def process_ingest_batch(
@@ -149,8 +181,12 @@ def start_ingest_dedup(
             digest_sketch=digest_sketch,
         )
 
+    return _start(stream, _process, checkpoint, query_name)
+
+
+def _start(stream: DataFrame, process, checkpoint: str, query_name: str):
     return (
-        stream.writeStream.foreachBatch(_process)
+        stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
         .queryName(query_name)
         .start()
@@ -158,8 +194,9 @@ def start_ingest_dedup(
 
 
 def read_ingested(spark, out_path: str) -> DataFrame:
-    """The accepted corpus across all epochs (epoch dirs are hive-style
-    partitions, so readers can also prune by epoch range)."""
+    """The accepted corpus across all epochs, for every family (epoch dirs
+    are hive-style partitions, so readers can also prune by epoch
+    range)."""
     return spark.read.option("basePath", out_path).parquet(f"{out_path}/epoch=*")
 
 
@@ -192,3 +229,99 @@ def process_ingest_batch_manifest(
         novel, index_path, epoch=epoch_id, owner=f"ingest:{table.path}"
     )
     table.commit_once(novel, key=epoch_id)
+
+
+def _novel_media_for_batch(
+    batch: DataFrame,
+    index_path: str,
+    intra_batch: bool,
+    epoch_id: int,
+    family: Family,
+) -> DataFrame | None:
+    """The media probe pipeline: fingerprint → [intra-batch exact-hash
+    collapse to the minimum id] → the shared replay-safe probe against
+    the persisted fingerprint index (stored ids are ``img_id`` for every
+    family)."""
+    if batch.isEmpty():
+        return None
+    fps = family.fingerprint(batch).localCheckpoint()
+    if intra_batch:
+        from pyspark.sql.window import Window as W
+
+        w = W.partitionBy(family.hash_col).orderBy(family.id_col)
+        fps = (
+            fps.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .localCheckpoint()
+        )
+    indexed = batch.sparkSession.read.parquet(
+        f"{index_path}/hashes"
+    ).withColumnRenamed("img_id", family.id_col)
+    return _replay_safe_novel(
+        fps,
+        epoch_id,
+        family.id_col,
+        indexed,
+        lambda b: phash_against_index(b, index_path, family=family),
+    )
+
+
+def process_media_ingest_batch(
+    batch: DataFrame,
+    epoch_id: int,
+    index_path: str,
+    out_path: str,
+    intra_batch: bool = True,
+    *,
+    family: Family,
+) -> None:
+    """Media edition of :func:`process_ingest_batch` for one perceptual
+    ``family`` (``phash_index.IMAGE``/``AUDIO``/``VIDEO``): one micro-batch
+    of (id, payload) rows → novel items → epoch-dir write + index extend.
+    The epoch dir stores the ACCEPTED input rows — joined back to the
+    batch by id, since the fingerprint frame dropped the payloads.
+    Intra-batch NEAR-dups are invisible to the probe until the next
+    batch, exactly the text caveat; run ``phash_near_dup_pairs`` over the
+    (small) novel set in-line when that matters."""
+    novel = _novel_media_for_batch(
+        batch, index_path, intra_batch, epoch_id, family
+    )
+    if novel is None:
+        return
+    accepted = batch.join(
+        F.broadcast(novel.select(family.id_col)), family.id_col
+    )
+    accepted.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
+    extend_phash_index(
+        novel,
+        index_path,
+        epoch=epoch_id,
+        owner=f"{family.name}-ingest:{out_path}",
+        family=family,
+    )
+
+
+def start_media_ingest(
+    stream: DataFrame,
+    index_path: str,
+    out_path: str,
+    checkpoint: str,
+    intra_batch: bool = True,
+    query_name: str | None = None,
+    *,
+    family: Family,
+):
+    """Start the media ingest query over an (id, payload, …) stream of
+    ``family``; the query is named ``<family>_ingest`` unless
+    ``query_name`` is given.  Returns the StreamingQuery."""
+
+    def _process(batch: DataFrame, epoch_id: int) -> None:
+        process_media_ingest_batch(
+            batch, epoch_id, index_path, out_path, intra_batch=intra_batch,
+            family=family,
+        )
+
+    return _start(
+        stream, _process, checkpoint, query_name or f"{family.name}_ingest"
+    )

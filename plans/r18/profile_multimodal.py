@@ -33,10 +33,8 @@ def timed_ckpt(self, eager=True):
 
 DataFrame.localCheckpoint = timed_ckpt
 
-import hive_serde_schema_gen_spark.operators.afp_index as AI
 import hive_serde_schema_gen_spark.operators.media_corpus as MC
 import hive_serde_schema_gen_spark.operators.phash_index as PI
-import hive_serde_schema_gen_spark.operators.vfp_index as VI
 
 
 def wrap(mod, name):
@@ -54,8 +52,6 @@ def wrap(mod, name):
 
 for mod, names in (
     (PI, ["build_phash_index", "extend_phash_index", "phash_against_index"]),
-    (AI, ["build_afp_index", "extend_afp_index", "afp_against_index"]),
-    (VI, ["build_vfp_index", "extend_vfp_index", "vfp_against_index"]),
     (MC, ["dedup_media_corpus", "decode_drop_report"]),
 ):
     for n in names:
@@ -63,10 +59,15 @@ for mod, names in (
 
 import hive_serde_schema_gen_spark.operators.multimodal as M
 
-# the facade binds names at import: re-point them at the wrapped versions
+# the facade and media_corpus bind names at import: re-point them at the
+# wrapped versions
 for n in ("dedup_media_corpus", "decode_drop_report"):
     if hasattr(M, n):
         setattr(M, n, getattr(MC, n))
+for n in ("build_phash_index", "extend_phash_index", "phash_against_index"):
+    for mod in (M, MC):
+        if hasattr(mod, n):
+            setattr(mod, n, getattr(PI, n))
 
 for rep in range(2):
     VERBOSE[0] = rep == 1

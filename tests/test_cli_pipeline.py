@@ -76,6 +76,26 @@ def test_schema_gen_rejects_sampling_ratio_outside_unit_interval(tmp_path, capsy
         assert "--sampling-ratio" in capsys.readouterr().err
 
 
+def test_schema_gen_permissive_never_prints_line_none(tmp_path, capsys):
+    # a cross-partition conflict and every sampled error carry no line
+    # number; the skipped-row report must not print one as "None"
+    nd = tmp_path / "rows.json"
+    nd.write_text(
+        "".join('{"a": %d}\n' % i for i in range(200))
+        + '{"a": "xxxxx"}\n' * 200
+    )
+    for extra in ([], ["--sampling-ratio", "0.5"]):
+        rc = main([str(nd), "t", "--mode", "PERMISSIVE", *extra])
+        assert rc == 0
+        skipped = [
+            ln
+            for ln in capsys.readouterr().err.splitlines()
+            if ln.startswith("skipped")
+        ]
+        assert skipped
+        assert not any("None" in ln for ln in skipped)
+
+
 def test_media_dedup_command(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

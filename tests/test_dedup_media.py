@@ -15,10 +15,7 @@ from hive_serde_schema_gen_spark.operators.multimodal import (
     _bmp_encode,
     _video_encode,
     _wav_encode,
-    audio_fingerprints,
     dedup_media_corpus,
-    image_hashes,
-    video_fingerprints,
 )
 
 
@@ -97,22 +94,19 @@ def test_audio_stages(spark):
     ids=["image", "audio", "video"],
 )
 def test_image_index_probe_and_extend(spark, idx_dir, modality, id_col, encode):
-    from hive_serde_schema_gen_spark.operators import (
-        afp_index,
-        phash_index,
-        vfp_index,
+    from hive_serde_schema_gen_spark.operators.phash_index import (
+        FAMILIES,
+        build_phash_index,
     )
 
-    build, fingerprint = {
-        "image": (phash_index.build_phash_index, image_hashes),
-        "audio": (afp_index.build_afp_index, audio_fingerprints),
-        "video": (vfp_index.build_vfp_index, video_fingerprints),
-    }[modality]
+    family = FAMILIES[modality]
     schema = f"{id_col} long, payload binary"
     history = spark.createDataFrame(
         [(100, encode(1, b"the one true image body, with pixels"))], schema
     )
-    build(fingerprint(history), idx_dir, n_files=1)
+    build_phash_index(
+        family.fingerprint(history), idx_dir, n_files=1, family=family
+    )
     acct: list = []
     d = spark.createDataFrame(
         [

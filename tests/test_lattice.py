@@ -4,6 +4,7 @@ A2-A6 plus merge-law checks."""
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import types as T
 
 from hive_serde_schema_gen_spark.schema_infer import (
     EMPTY_STRUCT,
@@ -20,6 +21,7 @@ from hive_serde_schema_gen_spark.schema_infer import (
     merge,
     observe,
     render_type,
+    to_spark_type,
 )
 
 
@@ -50,6 +52,33 @@ def col_type(schema, name):
 def test_numeric_ladder(value, expected):
     schema = infer_lines('{"v": %s}' % value)
     assert col_type(schema, "v") == expected
+
+
+@pytest.mark.parametrize(
+    "value,hive,spark",
+    [
+        ("-128", "TINYINT", T.ByteType()),
+        ("-129", "SMALLINT", T.ShortType()),
+        ("127", "TINYINT", T.ByteType()),
+        ("128", "SMALLINT", T.ShortType()),
+        ("-32768", "SMALLINT", T.ShortType()),
+        ("32768", "INT", T.IntegerType()),
+        ("2147483647", "INT", T.IntegerType()),
+        ("2147483648", "BIGINT", T.LongType()),
+        ("9223372036854775807", "BIGINT", T.LongType()),
+        ("9223372036854775808", "NUMERIC(19, 0)", T.DecimalType(19, 0)),
+        ("12345.67", "FLOAT", T.FloatType()),  # precision 7
+        ("123456.78", "DOUBLE", T.DoubleType()),  # precision 8
+        ("1234567890123.45", "DOUBLE", T.DoubleType()),  # precision 15
+        ("12345678901234.56", "NUMERIC(16, 2)", T.DecimalType(16, 2)),
+    ],
+)
+def test_numeric_tier_ddl_and_spark_type_agree(value, hive, spark):
+    # one tier decision feeds both renderers: the DDL name and the Spark
+    # type must agree at every ladder and precision edge
+    v = infer_lines('{"v": %s}' % value).fields["v"]
+    assert render_type(v) == hive
+    assert to_spark_type(v) == spark
 
 
 # --- A3: widening interactions -------------------------------------------

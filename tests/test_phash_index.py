@@ -25,16 +25,17 @@ from hive_serde_schema_gen_spark.operators.multimodal import (
     phash_near_dup_pairs,
 )
 from hive_serde_schema_gen_spark.operators.phash_index import (
+    IMAGE,
     build_phash_index,
     compact_phash_index,
     extend_phash_index,
-    novel_images,
+    novel_rows,
     phash_against_index,
 )
-from hive_serde_schema_gen_spark.streaming.image_ingest import (
-    process_image_ingest_batch,
-    read_ingested_images,
-    start_image_ingest,
+from hive_serde_schema_gen_spark.streaming.ingest import (
+    process_media_ingest_batch,
+    read_ingested,
+    start_media_ingest,
 )
 
 
@@ -93,7 +94,7 @@ def test_build_probe_matches_batch_operator(spark, dirs):
     assert got == want
     assert (102, 2, 0) in got  # the exact copy
     # the near-dup is found iff within the radius — consistent either way
-    novel = {r["img_id"] for r in novel_images(
+    novel = {r["img_id"] for r in novel_rows(
         bh, phash_against_index(bh, dirs["index"])).collect()}
     assert 105 in novel and 102 not in novel
 
@@ -134,24 +135,30 @@ def test_ingest_replay_idempotent(spark, dirs):
         image_hashes(_frame(spark, CORPUS)), dirs["index"], n_files=2
     )
     b0 = _frame(spark, [COPY_OF_2, NOVEL_A, NOVEL_B])
-    process_image_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(
+        b0, 0, dirs["index"], dirs["out"], family=IMAGE
+    )
     first = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested(spark, dirs["out"]).collect()
     }
     # full replay of epoch 0 after its extend committed
-    process_image_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(
+        b0, 0, dirs["index"], dirs["out"], family=IMAGE
+    )
     again = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested(spark, dirs["out"]).collect()
     }
     assert first == again == {105, 106}
     # cross-epoch re-delivery of an accepted id: rejected outright
     b1 = _frame(spark, [NOVEL_A, _img(301, b"novel in epoch one, a new payload !!")])
-    process_image_ingest_batch(b1, 1, dirs["index"], dirs["out"])
+    process_media_ingest_batch(
+        b1, 1, dirs["index"], dirs["out"], family=IMAGE
+    )
     final = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested(spark, dirs["out"]).collect()
     }
     assert final == {105, 106, 301}
 
@@ -215,12 +222,13 @@ def test_real_stream_drive(spark, dirs):
         .option("maxFilesPerTrigger", "1")
         .parquet(dirs["in"])
     )
-    q = start_image_ingest(
+    q = start_media_ingest(
         stream,
         dirs["index"],
         dirs["out"],
         dirs["chk"],
         query_name=f"img_ingest_{int(time.time() * 1000)}",
+        family=IMAGE,
     )
     try:
         _write("b0.parquet", [COPY_OF_2, NOVEL_A])
@@ -231,6 +239,6 @@ def test_real_stream_drive(spark, dirs):
         q.stop()
     got = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested(spark, dirs["out"]).collect()
     }
     assert got == {105, 106}

@@ -248,23 +248,25 @@ def test_vfp_index_lifecycle_and_grid_pin(spark, tmp_path, vfps):
         VFP_DUP_OFFSET,
     )
     from hive_serde_schema_gen_spark.operators.phash_index import (
+        VIDEO,
+        build_phash_index,
+        extend_phash_index,
+        novel_rows,
         phash_against_index,
-    )
-    from hive_serde_schema_gen_spark.operators.vfp_index import (
-        build_vfp_index,
-        extend_vfp_index,
-        novel_videos,
-        vfp_against_index,
     )
 
     idx = str(tmp_path / "vfp-idx")
     base = vfps.filter(f"vid_id < {VFP_DUP_OFFSET}")
     variants = vfps.filter(f"vid_id >= {VFP_DUP_OFFSET}")
-    build_vfp_index(base.filter("vid_id % 2 = 0"), idx, n_files=2)
-    extend_vfp_index(base.filter("vid_id % 2 = 1"), idx, epoch=3)
+    build_phash_index(
+        base.filter("vid_id % 2 = 0"), idx, n_files=2, family=VIDEO
+    )
+    extend_phash_index(
+        base.filter("vid_id % 2 = 1"), idx, epoch=3, family=VIDEO
+    )
     got = {
         (r["vid_id"], r["matched_vid_id"], r["dist"])
-        for r in vfp_against_index(variants, idx).collect()
+        for r in phash_against_index(variants, idx, family=VIDEO).collect()
     }
     fps_b = {r["vid_id"]: r["vfp"] for r in base.collect()}
     fps_v = {r["vid_id"]: r["vfp"] for r in variants.collect()}
@@ -275,7 +277,11 @@ def test_vfp_index_lifecycle_and_grid_pin(spark, tmp_path, vfps):
             if d <= PHASH_RADIUS:
                 brute.add((v, b, d))
     assert got == brute
-    novel = {r["vid_id"] for r in novel_videos(variants, vfp_against_index(variants, idx)).collect()}
+    novel = {r["vid_id"] for r in novel_rows(
+        variants,
+        phash_against_index(variants, idx, family=VIDEO),
+        family=VIDEO,
+    ).collect()}
     assert novel == set(fps_v) - {v for v, _, _ in brute}
     # cross-family pin: probing the video index with the IMAGE default
     # grid must fail loudly, not miss candidates
