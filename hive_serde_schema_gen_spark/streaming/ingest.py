@@ -231,42 +231,6 @@ def process_ingest_batch_manifest(
     table.commit_once(novel, key=epoch_id)
 
 
-def _novel_media_for_batch(
-    batch: DataFrame,
-    index_path: str,
-    intra_batch: bool,
-    epoch_id: int,
-    family: Family,
-) -> DataFrame | None:
-    """The media probe pipeline: fingerprint → [intra-batch exact-hash
-    collapse to the minimum id] → the shared replay-safe probe against
-    the persisted fingerprint index (stored ids are ``img_id`` for every
-    family)."""
-    if batch.isEmpty():
-        return None
-    fps = family.fingerprint(batch).localCheckpoint()
-    if intra_batch:
-        from pyspark.sql.window import Window as W
-
-        w = W.partitionBy(family.hash_col).orderBy(family.id_col)
-        fps = (
-            fps.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint()
-        )
-    indexed = batch.sparkSession.read.parquet(
-        f"{index_path}/hashes"
-    ).withColumnRenamed("img_id", family.id_col)
-    return _replay_safe_novel(
-        fps,
-        epoch_id,
-        family.id_col,
-        indexed,
-        lambda b: phash_against_index(b, index_path, family=family),
-    )
-
-
 def process_media_ingest_batch(
     batch: DataFrame,
     epoch_id: int,
@@ -278,14 +242,37 @@ def process_media_ingest_batch(
 ) -> None:
     """Media edition of :func:`process_ingest_batch` for one perceptual
     ``family`` (``phash_index.IMAGE``/``AUDIO``/``VIDEO``): one micro-batch
-    of (id, payload) rows → novel items → epoch-dir write + index extend.
+    of (id, payload) rows → fingerprints → [intra-batch exact-hash
+    collapse to the minimum id] → the shared replay-safe probe against
+    the persisted fingerprint index → epoch-dir write + index extend.
     The epoch dir stores the ACCEPTED input rows — joined back to the
     batch by id, since the fingerprint frame dropped the payloads.
     Intra-batch NEAR-dups are invisible to the probe until the next
     batch, exactly the text caveat; run ``phash_near_dup_pairs`` over the
     (small) novel set in-line when that matters."""
-    novel = _novel_media_for_batch(
-        batch, index_path, intra_batch, epoch_id, family
+    if batch.isEmpty():
+        return
+    fps = family.fingerprint(batch).localCheckpoint()
+    if intra_batch:
+        from pyspark.sql.window import Window as W
+
+        w = W.partitionBy(family.hash_col).orderBy(family.id_col)
+        fps = (
+            fps.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .localCheckpoint()
+        )
+    # the stored layout names the id img_id for every family
+    indexed = batch.sparkSession.read.parquet(
+        f"{index_path}/hashes"
+    ).withColumnRenamed("img_id", family.id_col)
+    novel = _replay_safe_novel(
+        fps,
+        epoch_id,
+        family.id_col,
+        indexed,
+        lambda b: phash_against_index(b, index_path, family=family),
     )
     if novel is None:
         return
